@@ -12,11 +12,15 @@ import graft.synth.TranscriptGen
  *  - mode "time":  replicate Bench's query-timing protocol (same session
  *    config, same warm-up incl. warmKgPrefix, System.gc between queries,
  *    `time(df.count())`), optionally repeated SPARK_GRAFT_EXTRA_REPS
- *    times per query (min reported). Prints one JSON line.
+ *    times per query (min over the successful reps reported). Prints one
+ *    JSON line; a query whose every rep failed prints as null, and
+ *    "failed" maps each query with a failed rep to its failed-rep count.
  *  - mode "plans": write `.explain("formatted")` for every matching query
  *    to <outDir>/<query>_<SPARK_GRAFT_EXTRA_SUFFIX>.txt.
  *  - mode "noop":  time each matching query with the noop sink (computes
- *    every column — guide §1.4) instead of count().
+ *    every column — guide §1.4) instead of count(); output as "time".
+ *  - mode "jobs":  run each matching query once with a job listener and
+ *    print every Spark job's wall time and first stages to stderr.
  *
  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in Bench.
  */
@@ -119,23 +123,27 @@ object BenchExtra {
         val useNoop = m == "noop"
         val results = selected.map { case (name, fn) =>
           spark.sparkContext.setJobDescription(name)
+          // None = a failed rep: it counts as failed, never as a time
           val samples = (1 to reps).map { _ =>
             System.gc()
-            try time {
+            try Some(time {
               if (useNoop)
                 fn(spark, sfDir).write.format("noop").mode("overwrite").save()
               else fn(spark, sfDir).count()
-            } catch { case _: Throwable => -1.0 }
+            }) catch { case _: Throwable => None }
           }
           spark.sparkContext.setJobDescription(null)
-          System.err.println(f"[time] $name min=${samples.min}%.3f " +
-            s"all=${samples.map(t => f"$t%.3f").mkString(",")}")
-          name -> samples.min
+          val best = samples.flatten.minOption
+          System.err.println(s"[time] $name min=${best.fold("null")(t => f"$t%.3f")} " +
+            s"all=${samples.map(_.fold("fail")(t => f"$t%.3f")).mkString(",")}")
+          (name, best, samples.count(_.isEmpty))
         }
-        val qs = results.map { case (k, v) => s""""$k":${f"$v%.3f"}""" }
+        val qs = results.map { case (k, v, _) =>
+          s""""$k":${v.fold("null")(t => f"$t%.3f")}""" }.mkString("{", ",", "}")
+        val failed = results.collect { case (k, _, n) if n > 0 => s""""$k":$n""" }
           .mkString("{", ",", "}")
-        val total = results.map(_._2).filter(_ >= 0).sum
-        println(s"""{"metric":"bench-extra $m","queries":$qs,""" +
+        val total = results.flatMap(_._2).sum
+        println(s"""{"metric":"bench-extra $m","queries":$qs,"failed":$failed,""" +
           s""""queries_total_sec":${f"$total%.3f"},"sf":"$sfDir","reps":$reps}""")
     }
     spark.stop()

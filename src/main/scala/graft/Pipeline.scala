@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.Schemas._
 import graft.operators._
 
@@ -17,45 +18,31 @@ import graft.operators._
  */
 object Pipeline {
 
-  /** The fused per-turn hot path: tokenize → tag → decode → me-sub →
-    * structured result → triple emit, with NO intermediate Dataset
-    * boundary. This is the single function the scaling bench measures —
-    * graft.Micro runs it verbatim on a plain thread pool as the
-    * Spark-free control, so the control and the engine share the hot
-    * path by construction.
+  /** The fused per-turn hot path: the per-turn kernel
+    * ([[graft.operators.Decode.turnEntities]]: tokenize → tag → decode →
+    * me-sub) → structured result → triple emit, with NO intermediate
+    * Dataset boundary. graft.Micro runs it verbatim on a plain thread
+    * pool as the Spark-free control, so the control and the engine share
+    * the hot path by construction.
     *
-    * Why fused (round-2 scaling autopsy): the staged form
-    * (detect `mapPartitions` → decode `map` → triples `flatMap`) crosses
-    * TWO typed-Dataset encoder boundaries per turn — each re-encodes the
-    * full token/tag/entity arrays through the product encoder into
-    * UnsafeRows and back. At 1 core that cost hides under compute; at 4+
-    * cores it is pure allocation-rate pressure (the measured scaling
-    * limiter for this workload) and dragged 1→4 efficiency to 0.70 vs
-    * the 1.00 Spark-free control. Fused, only the (sparse) Triple rows
-    * ever meet an encoder. */
+    * Why fused (round-2 scaling autopsy): allocation rate is the measured
+    * scaling limiter for this workload, so only the (sparse) Triple rows
+    * ever meet an encoder — no per-turn token/tag/entity arrays cross a
+    * typed-Dataset boundary. */
   def extractTurn(model: Detector.Model, convId: String, turnIdx: Int,
-      role: String, text: String): Seq[Triple] = {
-    // packed-offset forms: no Token objects, no per-token substrings —
-    // the tokenizer emits start<<32|end longs, the detector aligns on
-    // the boundary arrays, the decoder slices the original text
-    // (equivalence with the object forms pinned by PropertySpec)
-    val offs = graft.functions.PyText.tokenizeOffsetsPacked(text)
-    val tags = Detector.tagTokensPacked(model, text, offs)
-    val ents = Decode.meSubstitute(
-      Decode.decodeEntitiesPacked(text, offs, tags),
-      if (role == null) "" else role)
-    Triples.emitArrays(convId, turnIdx, Triples.structuredArraysShared(ents),
+      role: String, text: String): Seq[Triple] =
+    Triples.emitArrays(convId, turnIdx,
+      Triples.structuredArraysShared(Decode.turnEntities(model, text, role)),
       "gazetteer:ac")
-  }
 
   def extractTurn(model: Detector.Model, t: Turn): Seq[Triple] =
     extractTurn(model, t.conv_id, t.turn_idx, t.role, t.text)
 
   /** turns -> triples (pre-canonicalization). ONE narrow `mapPartitions`
     * end-to-end (zero shuffles, zero intermediate encoder round-trips —
-    * see [[extractTurn]]); equivalent to
-    * `Triples.triples(Decode.decode(Detector.detect(...)))` stage by
-    * stage (DecodeSpec/ParitySpec pin the equivalence).
+    * see [[extractTurn]]); equal to `Triples.triples(decodeTurns(...))`
+    * (ScaleSpec pins the equivalence, ParitySpec pins both against the
+    * reference oracle).
     *
     * The typed boundary is PRUNED to the four columns the hot path reads
     * (conv_id, turn_idx, role, text): over a parquet source Catalyst
@@ -66,7 +53,6 @@ object Pipeline {
     * path. */
   def extract(spark: SparkSession, turns: Dataset[Turn]): Dataset[Triple] = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val bc = spark.sparkContext.broadcast(Detector.buildModel())
     turns.select(col("conv_id"), col("turn_idx"), col("role"), col("text"))
       .as[(String, Int, String, String)]
@@ -76,10 +62,22 @@ object Pipeline {
       }
   }
 
-  /** turns -> decoded turns (exposed for linking/coref stages). */
+  /** turns -> decoded turns (exposed for linking/coref stages): ONE
+    * narrow `mapPartitions` running the per-turn kernel, row order
+    * preserved. The typed boundary is pruned like [[extract]]'s — every
+    * DecodedTurn column but the timestamp. */
   def decodeTurns(spark: SparkSession, turns: Dataset[Turn]): Dataset[DecodedTurn] = {
+    import spark.implicits._
     val bc = spark.sparkContext.broadcast(Detector.buildModel())
-    Decode.decode(spark, Detector.detect(spark, turns, bc))
+    turns.select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
+        col("text"))
+      .as[(String, Int, String, String, String)]
+      .mapPartitions { it =>
+        val model = bc.value // dereferenced once per partition
+        it.map { case (c, i, r, tool, x) =>
+          DecodedTurn(c, i, r, tool, x, Decode.turnEntities(model, x, r))
+        }
+      }
   }
 
   /** All mention sources unioned (SURVEY §7.2: gazetteer ∪ regex), deduped

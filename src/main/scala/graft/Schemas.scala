@@ -76,24 +76,13 @@ object Schemas {
       turn_idx: Int,
       evidence: String)
 
-  /** Per-turn intermediate: token list with offsets + per-token tags.
-    * Kept nested (array columns) so detect→decode→dedup is row-local —
-    * tokens of one turn never cross a partition boundary, so the whole
-    * extraction core runs with ZERO shuffles (the scale-critical design
-    * decision; see SURVEY.md §4.3 "shuffle budget"). */
-  final case class TaggedTurn(
-      conv_id: String,
-      turn_idx: Int,
-      role: String,
-      tool: String,
-      text: String,
-      toks: Seq[Token],
-      tags: Seq[String])
-
   /** One token with UTF-16 offsets into the turn text. */
   final case class Token(tok: String, start: Int, end: Int)
 
-  /** Per-turn decoded entities, still nested (row-local through dedup). */
+  /** Per-turn decoded entities, still nested (row-local through dedup):
+    * a turn's entities never cross a partition boundary, so the whole
+    * extraction core runs with ZERO shuffles (the scale-critical design
+    * decision; see SURVEY.md §4.3 "shuffle budget"). */
   final case class DecodedTurn(
       conv_id: String,
       turn_idx: Int,

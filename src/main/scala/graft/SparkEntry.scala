@@ -695,8 +695,9 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"), sum("h").as("hashsum"))),
     "q_kg_triples" -> ((s, d) =>
       // triple emission over the shared decoded prefix — equivalent to the
-      // fused Pipeline.extract (DecodeSpec pins staged == fused); the fused
-      // path itself is value-gated by q_kg_pred_counts/q_kg_triples_sample
+      // fused Pipeline.extract (ScaleSpec pins decodeTurns->triples ==
+      // extract); the fused path itself is value-gated by
+      // q_kg_pred_counts/q_kg_triples_sample
       Triples.triples(s,
         decodedPrefix(s, TranscriptGen.convsForSfDir(d))).toDF()),
     "q_kg_linked" -> ((s, d) => {
@@ -792,7 +793,8 @@ object SparkEntry {
       // (graft.tools.KgOracleDump asserts engine == oracle before the
       // literals are embedded). Scope note: KgOracleDump feeds the oracle
       // the ENGINE's tokens/tags (PyText.tokenizeWithOffsets +
-      // Detector.tagTokens), so these gates independently check
+      // Detector.tagTokensPacked, through the test-side EngineTags
+      // helper), so these gates independently check
       // decode→dedup→emit only; tokenizer/detector coverage rests on the
       // CPython goldens (PyTextSpec) and the scanner==regex property test
       // — the same boundary ParitySpec documents. The corpus is PINNED to

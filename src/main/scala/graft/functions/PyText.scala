@@ -187,9 +187,21 @@ object PyText {
   def matchesChannelGuard(token: String): Boolean =
     channelGuardPattern.matcher(token).find()
 
+  /** The reference custom tokenizer's token strings with their offsets:
+    * [[tokenizeOffsetsPacked]]'s boundaries, each sliced from `text`. For
+    * callers that need the token text (the F1 projection, codepoint
+    * offsets, the Python encode() shape); the extraction kernel reads
+    * the packed offsets alone. */
+  def tokenizeWithOffsets(text: String): Array[Token] =
+    tokenizeOffsetsPacked(text).map { o =>
+      val s = (o >>> 32).toInt; val e = o.toInt
+      Token(text.substring(s, e), s, e)
+    }
+
   /**
    * The reference custom tokenizer (TokenizerCustom.py:7-28), with the
-   * offsets the Python version discards (we need them for span arithmetic).
+   * offsets the Python version discards (we need them for span
+   * arithmetic), packed start<<32|end into a primitive long array.
    *
    * Algorithm parity:
    *  - regex word matches are kept whole;
@@ -199,6 +211,11 @@ object PyText {
    *  - whitespace tokens are dropped except a literal "\n".
    *
    * Offsets are UTF-16 code-unit indices into `text` (substring-ready).
+   * Packed, not Token objects: the extraction kernel never reads the
+   * token substrings (the detector aligns on boundaries, the decoder
+   * slices the original text), so a Token object + substring per token
+   * (~2 allocations x ~20 tokens x every turn of the corpus) would be
+   * pure GC pressure.
    *
    * Implemented as a table-driven scanner, not a regex find() loop: this
    * runs once per turn of a 10^12-turn corpus and the regex engine was
@@ -209,49 +226,6 @@ object PyText {
    * with class membership read from tables generated from the regex
    * classes themselves. [[tokenizeWithOffsetsRegex]] keeps the direct
    * regex form; PropertySpec pins scanner == regex on random unicode.
-   */
-  def tokenizeWithOffsets(text: String): Array[Token] = {
-    if (text == null) return Array.empty
-    val out = scala.collection.mutable.ArrayBuffer.empty[Token]
-    val n = text.length
-    var i = 0
-    while (i < n) {
-      val c = text.charAt(i)
-      var j = -1
-      if (inA(c)) {
-        j = i + 1
-        while (j < n && inA(text.charAt(j))) j += 1
-      } else if (inB(c)) {
-        j = i + 1
-        while (j < n && inB(text.charAt(j))) j += 1
-      }
-      if (j > 0) {
-        // word match: swallow the [.!]* suffix; class chars are never
-        // whitespace so the match always survives the whitespace filter
-        while (j < n && { val s = text.charAt(j); s == '.' || s == '!' }) j += 1
-        out += Token(text.substring(i, j), i, j)
-        i = j
-      } else {
-        // gap: one codepoint, dropped iff whitespace other than "\n"
-        val cp = text.codePointAt(i)
-        val w = Character.charCount(cp)
-        if (cp == '\n' || !pyIsSpaceCp(cp))
-          out += Token(text.substring(i, i + w), i, i + w)
-        i += w
-      }
-    }
-    out.toArray
-  }
-
-  /**
-   * [[tokenizeWithOffsets]] returning ONLY the offsets, packed
-   * start<<32|end into a primitive long array — the fused extraction
-   * path never reads the token substrings (the detector aligns on
-   * boundaries, the decoder slices the original text), so the Token
-   * object + substring per token (~2 allocations x ~20 tokens x every
-   * turn of the corpus) are pure GC pressure there. Same scanner,
-   * byte-for-byte the same boundaries (pinned by PropertySpec
-   * packed == tokenizeWithOffsets).
    */
   def tokenizeOffsetsPacked(text: String): Array[Long] = {
     if (text == null) return Array.emptyLongArray
@@ -270,10 +244,13 @@ object PyText {
         while (j < n && inB(text.charAt(j))) j += 1
       }
       if (j > 0) {
+        // word match: swallow the [.!]* suffix; class chars are never
+        // whitespace so the match always survives the whitespace filter
         while (j < n && { val s = text.charAt(j); s == '.' || s == '!' }) j += 1
         out += (i.toLong << 32) | j.toLong
         i = j
       } else {
+        // gap: one codepoint, dropped iff whitespace other than "\n"
         val cp = text.codePointAt(i)
         val w = Character.charCount(cp)
         if (cp == '\n' || !pyIsSpaceCp(cp))

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims.{toColumn => toCol, toExpression => toExpr}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.DataTypeMismatch
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -82,9 +84,25 @@ object VectorStatics {
 
 /** Row-local cosine as a proper codegen'd expression (see
   * [[VectorStatics.cosine]] for the pinned null/length/precision
-  * semantics). Inputs must be array<float> or array<double>. */
+  * semantics). Inputs must be array<float> or array<double>; any other
+  * input type fails analysis (no implicit cast). */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    Seq(left, right).zip(Seq("first", "second")).collectFirst {
+      case (e, ord) if !isVector(e.dataType) =>
+        DataTypeMismatch("UNEXPECTED_INPUT_TYPE", Map(
+          "paramIndex" -> ord,
+          "requiredType" -> "(\"ARRAY<FLOAT>\" or \"ARRAY<DOUBLE>\")",
+          "inputSql" -> s"\"${e.sql}\"",
+          "inputType" -> s"\"${e.dataType.sql}\""))
+    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
+
+  private def isVector(t: DataType): Boolean = t match {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _ => false
+  }
 
   private def elemIsFloat(e: Expression): Boolean = e.dataType match {
     case ArrayType(FloatType, _) => true

@@ -28,56 +28,22 @@ import graft.Gazetteer
  * speaker coreference, SURVEY.md §2.2 P8). Runs BEFORE dedup, same order as
  * the reference.
  *
- * The primary implementation is row-local (tokens are a nested array — no
- * shuffle). [[decodeExploded]] is the equivalent window/gaps-and-islands
- * formulation over exploded token rows, used when tags arrive as long-format
- * rows and pinned against the row-local one by DecodeSpec.
+ * The primary implementation is row-local (a turn's tokens never leave
+ * its row — no shuffle). [[decodeExploded]] is the equivalent
+ * window/gaps-and-islands formulation over exploded token rows, used when
+ * tags arrive as long-format rows and pinned against the row-local one by
+ * DecodeSpec.
  */
 object Decode {
 
-  /** Exact imperative decode of one turn (order = token order).
+  /** Exact imperative decode of one turn over packed start<<32|end token
+    * offsets ([[graft.functions.PyText.tokenizeOffsetsPacked]]); order =
+    * token order, entity text sliced from the original turn text — no
+    * Token objects, no per-token substrings. PropertySpec pins it (with
+    * me-substitution) against the independent ReferenceOracle decode.
     * Hot-path note: the output buffer is allocated LAZILY — the majority
     * of turns in a real corpus are all-"O" and must not pay a buffer +
     * copy per turn. */
-  def decodeEntities(text: String, toks: IndexedSeq[Token],
-      tags: IndexedSeq[String]): Seq[Entity] = {
-    var out: scala.collection.mutable.ArrayBuffer[Entity] = null
-    @inline def push(e: Entity): Unit = {
-      if (out == null) out = new scala.collection.mutable.ArrayBuffer[Entity](4)
-      out += e
-    }
-    var curTag: String = null
-    var curStart = 0
-    var curEnd = 0
-    var i = 0
-    while (i < toks.length) {
-      val tag = tags(i)
-      if (tag != "O") {
-        if (curTag == null || tag != curTag) {
-          if (curTag != null)
-            push(Entity(curTag, text.substring(curStart, curEnd), curStart, curEnd))
-          curTag = tag; curStart = toks(i).start; curEnd = toks(i).end
-        } else {
-          curEnd = toks(i).end // continue: extend to this word's end
-        }
-      } else if (curTag != null) {
-        push(Entity(curTag, text.substring(curStart, curEnd), curStart, curEnd))
-        curTag = null
-      }
-      i += 1
-    }
-    if (curTag != null)
-      push(Entity(curTag, text.substring(curStart, curEnd), curStart, curEnd))
-    if (out == null) Seq.empty
-    // ArraySeq wrap, not .toSeq (r06): ArrayBuffer.toSeq delegates to
-    // List.from — one cons cell per entity on the per-turn hot path;
-    // allocation rate is the measured scaling limiter
-    else scala.collection.immutable.ArraySeq.unsafeWrapArray(out.toArray)
-  }
-
-  /** [[decodeEntities]] over packed start<<32|end token offsets — the
-    * fused extraction path's form (no Token objects; equivalence pinned
-    * by PropertySpec packed == object decode). */
   def decodeEntitiesPacked(text: String, offs: Array[Long],
       tags: Array[String]): Seq[Entity] = {
     var out: scala.collection.mutable.ArrayBuffer[Entity] = null
@@ -110,13 +76,16 @@ object Decode {
     if (curTag != null)
       push(Entity(curTag, text.substring(curStart, curEnd), curStart, curEnd))
     if (out == null) Seq.empty
-    else scala.collection.immutable.ArraySeq.unsafeWrapArray(out.toArray) // see decodeEntities
+    // ArraySeq wrap, not .toSeq (r06): ArrayBuffer.toSeq delegates to
+    // List.from — one cons cell per entity on the per-turn hot path;
+    // allocation rate is the measured scaling limiter
+    else scala.collection.immutable.ArraySeq.unsafeWrapArray(out.toArray)
   }
 
   /**
    * Subword-accurate decode (reference src/prod.py:52-117 over REAL HF
    * word_ids/offsets): the engine's native tokens are whole words (so
-   * [[decodeEntities]] suffices internally), but a user replaying
+   * [[decodeEntitiesPacked]] suffices internally), but a user replaying
    * reference fixtures has WordPiece subtokens where one word spans
    * several subtokens and special tokens carry word_id = None. Exact
    * reference semantics:
@@ -129,7 +98,7 @@ object Decode {
    *    CURRENT WORD — the forward cursor scan over the remaining
    *    subtokens of the same word (prod.py:100-105), NOT just the first
    *    subtoken's end;
-   *  - same open/extend/close quirks as [[decodeEntities]] (adjacent
+   *  - same open/extend/close quirks as [[decodeEntitiesPacked]] (adjacent
    *    same-tag entities merge; trailing entity flushed).
    *
    * @param wordIds  per-subtoken word index, -1 for None
@@ -204,22 +173,19 @@ object Decode {
     else entities.map(e => if (isMe(e)) e.copy(text = speaker) else e)
   }
 
-  /** tagged turns -> decoded turns (narrow, row-local). */
-  def decode(spark: SparkSession, tagged: Dataset[TaggedTurn]): Dataset[DecodedTurn] = {
-    import spark.implicits._
-    tagged.map { t =>
-      val toksIdx = t.toks match {
-        case is: IndexedSeq[Token] => is
-        case other => other.toIndexedSeq
-      }
-      val tagsIdx = t.tags match {
-        case is: IndexedSeq[String] => is
-        case other => other.toIndexedSeq
-      }
-      val ents = meSubstitute(decodeEntities(t.text, toksIdx, tagsIdx),
-        if (t.role == null) "" else t.role)
-      DecodedTurn(t.conv_id, t.turn_idx, t.role, t.tool, t.text, ents)
-    }
+  /** The per-turn extraction kernel (src/prod.py:32-125): tokenize → tag →
+    * span-decode → me-substitute, over packed offsets end to end. It is
+    * the ONE implementation of that chain: `Pipeline.extractTurn`,
+    * `Pipeline.decodeTurns` (and through it `StatefulCoref`),
+    * `VideoPipeline.predict` and `StreamingIngest.windowedMentionCounts`
+    * all call it. A null text has no entities; a null speaker
+    * substitutes "". */
+  def turnEntities(model: Detector.Model, text: String,
+      speaker: String): Seq[Entity] = {
+    val offs = graft.functions.PyText.tokenizeOffsetsPacked(text)
+    val tags = Detector.tagTokensPacked(model, text, offs)
+    meSubstitute(decodeEntitiesPacked(text, offs, tags),
+      if (speaker == null) "" else speaker)
   }
 
   /** Long-format mentions view (FIXTURES.md §3 `mentions` schema). */

@@ -1,10 +1,7 @@
 package graft.operators
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.Gazetteer
 import graft.Schemas._
-import graft.functions.PyText
 
 /**
  * Mention detection (SURVEY.md §2.8 M1): the deterministic replacement for
@@ -15,8 +12,9 @@ import graft.functions.PyText
  *  - the Aho-Corasick automaton over all gazetteer surfaces is built ONCE
  *    on the driver and broadcast (the analog of per-process model load +
  *    warmup, src/prod.py:14-15);
- *  - detection runs as `mapPartitions` over `Dataset[Turn]`: per-partition
- *    the broadcast value is dereferenced once, then thousands of turns
+ *  - detection runs inside the per-turn kernel ([[Decode.turnEntities]]),
+ *    which callers map over partitions of turns: per-partition the
+ *    broadcast value is dereferenced once, then thousands of turns
  *    stream through with zero per-row setup — a NARROW transformation, so
  *    the whole detect→decode→dedup→triple core needs NO shuffle;
  *  - matching is case-insensitive (text lowercased with Locale.ROOT) and
@@ -47,45 +45,29 @@ object Detector {
       byLower.values.map(_.priority).toArray)
   }
 
-  /** Tag one turn's tokens. Returns the per-token tag array ("O" default).
+  /** Tag one turn's tokens, given as packed start<<32|end offsets
+    * ([[graft.functions.PyText.tokenizeOffsetsPacked]]). Returns the
+    * per-token tag array ("O" default).
     *
     * Allocation discipline: this runs for EVERY turn of a 10^12-turn
     * corpus; the workload is allocation-rate bound (measured: per-thread
     * throughput halves from 8 to 32 threads with boxed collections), so
     * token alignment uses sorted primitive arrays + binary search and the
     * automaton returns packed longs — no boxing on the per-turn path. */
-  def tagTokens(model: Model, text: String, toks: Array[Token]): Array[String] = {
-    val starts = new Array[Int](toks.length)
-    val ends = new Array[Int](toks.length)
-    var i = 0
-    while (i < toks.length) {
-      starts(i) = toks(i).start; ends(i) = toks(i).end; i += 1
-    }
-    tagTokensCore(model, text, starts, ends)
-  }
-
-  /** [[tagTokens]] over packed start<<32|end offsets
-    * ([[graft.functions.PyText.tokenizeOffsetsPacked]]) — the fused
-    * extraction path's form: no Token objects anywhere. */
   def tagTokensPacked(model: Model, text: String, offs: Array[Long]): Array[String] = {
-    val starts = new Array[Int](offs.length)
-    val ends = new Array[Int](offs.length)
+    val nToks = offs.length
+    val starts = new Array[Int](nToks)
+    val ends = new Array[Int](nToks)
     var i = 0
-    while (i < offs.length) {
+    while (i < nToks) {
       starts(i) = (offs(i) >>> 32).toInt; ends(i) = offs(i).toInt; i += 1
     }
-    tagTokensCore(model, text, starts, ends)
-  }
-
-  private def tagTokensCore(model: Model, text: String,
-      starts: Array[Int], ends: Array[Int]): Array[String] = {
-    val nToks = starts.length
     val tags = Array.fill(nToks)("O")
     if (nToks == 0) return tags
     val lower = text.toLowerCase(java.util.Locale.ROOT)
     // boundary arrays for token alignment (token starts/ends are sorted)
     val coreEnds = new Array[Int](nToks) // ends minus [.!]* suffix
-    var i = 0
+    i = 0
     while (i < nToks) {
       var e = ends(i)
       while (e > starts(i) &&
@@ -216,21 +198,5 @@ object Detector {
       }
     }
     out.toSeq
-  }
-
-  /** turns -> tokenized + tagged turns (narrow; no shuffle). */
-  def detect(spark: SparkSession, turns: Dataset[Turn],
-      bc: Broadcast[Model]): Dataset[TaggedTurn] = {
-    import spark.implicits._
-    turns.mapPartitions { it =>
-      val model = bc.value // dereferenced once per partition
-      it.map { t =>
-        val toks = PyText.tokenizeWithOffsets(t.text)
-        TaggedTurn(t.conv_id, t.turn_idx, t.role, t.tool, t.text,
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(toks),
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(
-            tagTokens(model, t.text, toks)))
-      }
-    }
   }
 }

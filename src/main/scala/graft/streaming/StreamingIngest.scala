@@ -75,13 +75,9 @@ object StreamingIngest {
       watermark: String = "10 minutes"): org.apache.spark.sql.DataFrame = {
     val bc = spark.sparkContext.broadcast(Detector.buildModel())
     val tagsOf = udf { (text: String) =>
-      // packed hot-path forms (no Token objects, no per-token substrings)
-      // — same allocation profile as Pipeline.extractTurn; packed==object
-      // equivalence is pinned by PropertySpec
-      val model = bc.value
-      val offs = graft.functions.PyText.tokenizeOffsetsPacked(text)
-      val tags = Detector.tagTokensPacked(model, text, offs)
-      Decode.decodeEntitiesPacked(text, offs, tags).map(_.tag)
+      // the per-turn kernel Pipeline.extractTurn runs; me-substitution
+      // rewrites entity text only, so the tags need no speaker
+      Decode.turnEntities(bc.value, text, null).map(_.tag)
     }
     turns
       .withWatermark("ts", watermark)

@@ -61,7 +61,7 @@ class AutomatonScaleSpec extends AnyFunSuite {
     val model = Detector.buildModel(Gazetteer.entries ++ big)
     val text = "check out Senbonzakura covered by Hatsune Miku"
     val toks = graft.functions.PyText.tokenizeWithOffsets(text)
-    val tags = Detector.tagTokens(model, text, toks)
+    val tags = EngineTags(model, text, toks)
     val byTok = toks.map(_.tok).zip(tags).toMap
     assert(byTok("Senbonzakura") == "TITLE")
     assert(byTok("Miku") == "VOCALOID")
@@ -75,9 +75,9 @@ class AutomatonScaleSpec extends AnyFunSuite {
     val base = "check out Senbonzakura covered by Hatsune Miku"
     val text = base + (" " * ((1 << 21) + 7)) + base
     val toks = graft.functions.PyText.tokenizeWithOffsets(text)
-    val tags = Detector.tagTokens(model, text, toks)
+    val tags = EngineTags(model, text, toks)
     val baseToks = graft.functions.PyText.tokenizeWithOffsets(base)
-    val baseTags = Detector.tagTokens(model, base, baseToks).toSeq
+    val baseTags = EngineTags(model, base, baseToks).toSeq
     assert(toks.last.start > (1 << 21), "fixture must cross the bound")
     assert(tags.toSeq == baseTags ++ baseTags,
       "tags diverged across the 2^21 offset boundary")

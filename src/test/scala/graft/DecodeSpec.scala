@@ -1,26 +1,25 @@
 package graft
 
-import graft.Schemas.Token
 import graft.operators.{Decode, Detector}
 import graft.functions.PyText
 
 class DecodeSpec extends SparkSuite {
 
-  private def toks(words: (String, Int, Int)*): IndexedSeq[Token] =
-    words.map { case (t, s, e) => Token(t, s, e) }.toIndexedSeq
+  /** (start, end) token spans packed start<<32|end, the decoder's input. */
+  private def offs(spans: (Int, Int)*): Array[Long] =
+    spans.map { case (s, e) => (s.toLong << 32) | e.toLong }.toArray
 
   test("decode merges adjacent same-tag words into one span (reference quirk)") {
     val text = "Hatsune Miku sings"
-    val tk = toks(("Hatsune", 0, 7), ("Miku", 8, 12), ("sings", 13, 18))
-    val ents = Decode.decodeEntities(text, tk, IndexedSeq("VOCALOID", "VOCALOID", "O"))
+    val ents = Decode.decodeEntitiesPacked(text, offs((0, 7), (8, 12), (13, 18)),
+      Array("VOCALOID", "VOCALOID", "O"))
     assert(ents == Seq(Schemas.Entity("VOCALOID", "Hatsune Miku", 0, 12)))
   }
 
   test("tag change closes and reopens; trailing entity flushed") {
     val text = "Melt Hachi"
-    val tk = toks(("Melt", 0, 4), ("Hachi", 5, 10))
-    val ents = Decode.decodeEntities(text, tk,
-      IndexedSeq("TITLE", "ORIGINAL_AUTHOR"))
+    val ents = Decode.decodeEntitiesPacked(text, offs((0, 4), (5, 10)),
+      Array("TITLE", "ORIGINAL_AUTHOR"))
     assert(ents == Seq(
       Schemas.Entity("TITLE", "Melt", 0, 4),
       Schemas.Entity("ORIGINAL_AUTHOR", "Hachi", 5, 10)))
@@ -39,7 +38,7 @@ class DecodeSpec extends SparkSuite {
     val model = Detector.buildModel()
     val text = "check out Senbonzakura covered by Hatsune Miku"
     val tk = PyText.tokenizeWithOffsets(text)
-    val tags = Detector.tagTokens(model, text, tk)
+    val tags = EngineTags(model, text, tk)
     val byTok = tk.map(_.tok).zip(tags).toMap
     assert(byTok("Senbonzakura") == "TITLE")
     assert(byTok("covered") == "MODIFIER")
@@ -52,7 +51,7 @@ class DecodeSpec extends SparkSuite {
     // "me" (pronoun) must not fire inside "Melt"; "i" not inside "is"
     val text = "Melt is nice"
     val tk = PyText.tokenizeWithOffsets(text)
-    val tags = Detector.tagTokens(model, text, tk)
+    val tags = EngineTags(model, text, tk)
     assert(tk.map(_.tok).zip(tags).toMap.apply("is") == "O")
     assert(tags.count(_ != "O") == 1) // only Melt as TITLE
   }
@@ -61,7 +60,7 @@ class DecodeSpec extends SparkSuite {
     val model = Detector.buildModel()
     val text = "listening to Melt. great song"
     val tk = PyText.tokenizeWithOffsets(text)
-    val tags = Detector.tagTokens(model, text, tk)
+    val tags = EngineTags(model, text, tk)
     // token is "Melt." — gazetteer "melt" ends at its word-core end
     val idx = tk.indexWhere(_.tok == "Melt.")
     assert(idx >= 0 && tags(idx) == "TITLE")
@@ -81,6 +80,17 @@ class DecodeSpec extends SparkSuite {
     assert(got == Set(
       ("d1", "TITLE", 4, 12), ("d1", "VOCALOID", 16, 20),
       ("d2", "ALBUM", 0, 5), ("d2", "ALBUM", 9, 14)))
+    // the row-local decode over the same rows, one doc at a time
+    val text = "x" * 20
+    val rowLocal = rows.collect().groupBy(_.getString(0)).toSeq.flatMap {
+      case (doc, rs) =>
+        val byPos = rs.sortBy(_.getInt(1))
+        Decode.decodeEntitiesPacked(text,
+          offs(byPos.map(r => (r.getInt(3), r.getInt(4))): _*),
+          byPos.map(_.getString(2)))
+          .map(e => (doc, e.tag, e.start, e.end))
+    }
+    assert(rowLocal.size == got.size && rowLocal.toSet == got)
   }
 
   test("subword decode: multi-subtoken words, word-end extension, -100-path (prod.py:52-117)") {
@@ -116,13 +126,38 @@ class DecodeSpec extends SparkSuite {
     val model = Detector.buildModel()
     (0L until 30L).flatMap(c => graft.synth.TranscriptGen.turnsOfConv(42L, c, 8))
       .foreach { t =>
-        val tk = PyText.tokenizeWithOffsets(t.text)
-        val tags = Detector.tagTokens(model, t.text, tk)
-        val whole = Decode.decodeEntities(t.text, tk.toIndexedSeq, tags.toIndexedSeq)
+        val offs = PyText.tokenizeOffsetsPacked(t.text)
+        val tags = Detector.tagTokensPacked(model, t.text, offs)
+        val whole = Decode.decodeEntitiesPacked(t.text, offs, tags)
         val sub = Decode.decodeSubword(t.text,
-          Array.tabulate(tk.length)(identity),
-          tk.map(_.start), tk.map(_.end), tags)
+          Array.tabulate(offs.length)(identity),
+          offs.map(o => (o >>> 32).toInt), offs.map(_.toInt), tags)
         assert(sub == whole, s"diverged on: ${t.text}")
       }
+  }
+
+  test("decodeTurns: null text decodes to no entities; null role me-subs to \"\"") {
+    import spark.implicits._
+    val turns = Seq(
+      Schemas.Turn("c1", 0, "user", null, null, null),
+      Schemas.Turn("c1", 1, null, "Melt remixed by me", "tool", null),
+      Schemas.Turn("c2", 0, "assistant", "Senbonzakura covered by I", null, null))
+      .toDS()
+    val got = Pipeline.decodeTurns(spark, turns).collect().toSeq
+    // expected: Token objects + engine tags through the reference decode
+    // and me-sub, the speaker defaulting to "" as on every decode path
+    val model = Detector.buildModel()
+    val expected = turns.collect().toSeq.map { t =>
+      val tk = PyText.tokenizeWithOffsets(t.text).toIndexedSeq
+      val ents = ReferenceOracle.meSubstitute(
+        ReferenceOracle.decode(t.text, tk, EngineTags(model, t.text, tk).toIndexedSeq),
+        if (t.role == null) "" else t.role)
+      Schemas.DecodedTurn(t.conv_id, t.turn_idx, t.role, t.tool, t.text,
+        ents.map { case (tag, x, s, e) => Schemas.Entity(tag, x, s, e) })
+    }
+    assert(got == expected)
+    assert(got(0).entities.isEmpty)
+    assert(got(1).entities.exists(e => e.tag == "ORIGINAL_AUTHOR" && e.text == ""))
+    assert(got(2).entities.exists(_.text == "assistant"))
   }
 }

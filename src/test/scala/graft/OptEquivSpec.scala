@@ -162,6 +162,18 @@ class OptEquivSpec extends SparkSuite {
     }
   }
 
+  test("cosine expression: a non-float/double array input fails analysis") {
+    import spark.implicits._
+    val rows = Seq((Array(1, 2), Array(1.0, 2.0))).toDF("a", "b")
+    // the type check runs when the query is analyzed (select), not at
+    // codegen: no plan over array<int> is ever built
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      rows.select(Similarity.cosine(col("a"), col("b")))
+    }
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+    assert(e.getMessage.contains("ARRAY<INT>"), e.getMessage)
+  }
+
   // original (pre-r06) shingle column, kept as the reference
   private def shinglesHof(text: Column, k: Int): Column = {
     val toks = split(lower(trim(text)), "\\s+")
@@ -222,16 +234,28 @@ class OptEquivSpec extends SparkSuite {
   }
 
   test("lshBandHashes == original hash(slice(signature)) on real embeddings") {
+    import spark.implicits._
     val planes = Similarity.hyperplanes(64, 64)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select("embedding")
+      .unionByName(Seq(Option.empty[Seq[Float]]).toDF("embedding"))
     val bandCols = (0 until 8).map(b =>
       hash(slice(Similarity.lshSignature(col("embedding"), planes),
         b * 8 + 1, 8)))
-    val diff = emb.select(
+    val cmp = emb.select(col("embedding"),
       Similarity.lshBandHashes(col("embedding"), planes, 8).as("fast"),
       array(bandCols: _*).as("ref"))
-      .where(col("fast") =!= col("ref")).count()
+    val diff = cmp.where(col("embedding").isNotNull && col("fast") =!= col("ref"))
+      .count()
     assert(diff == 0)
+    // null embedding: no band hashes, so posexplode drops the row; the pre-r06
+    // chain hashed the null slice to the seed (42), banding all nulls together
+    val nulls = cmp.where(col("embedding").isNull).collect()
+    assert(nulls.length == 1 && nulls.head.isNullAt(1))
+    assert(nulls.head.getSeq[Int](2) == Seq.fill(8)(42))
+    assert(emb.where(col("embedding").isNull)
+      .select(posexplode(Similarity.lshBandHashes(col("embedding"), planes, 8)))
+      .count() == 0)
   }
 
   test("langId static == HOF on the sf0.001 documents corpus") {

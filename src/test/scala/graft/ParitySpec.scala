@@ -31,7 +31,7 @@ class ParitySpec extends SparkSuite {
     val expected = (0L until nConvs).flatMap { c =>
       TranscriptGen.turnsOfConv(42L, c, 8).flatMap { t =>
         val toks = PyText.tokenizeWithOffsets(t.text).toIndexedSeq
-        val tags = Detector.tagTokens(model, t.text, toks.toArray).toIndexedSeq
+        val tags = EngineTags(model, t.text, toks).toIndexedSeq
         ReferenceOracle.extract(t.conv_id, t.turn_idx, t.role, t.text, toks, tags)
           .map { case (s, p, o) => (t.conv_id, t.turn_idx, s, p, o) }
       }

@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import graft.functions.PyText
 import graft.operators.{Decode, Detector, GreedyDedup}
-import graft.Schemas.Token
 
 /** Property tests (SURVEY.md §5.2-3): invariants over random inputs,
   * including astral-plane and CJK codepoints. */
@@ -80,10 +79,10 @@ class PropertySpec extends AnyFunSuite {
   test("decode: spans non-overlapping, ordered, never tagged O, text slices match") {
     val tagGen = Gen.listOf(Gen.oneOf("O", "O", "TITLE", "VOCALOID", "ALBUM"))
     forAll2(textGen, tagGen) { (text, rawTags) =>
-      val toks = PyText.tokenizeWithOffsets(text).toIndexedSeq
-      val tags = toks.indices.map(i =>
+      val offs = PyText.tokenizeOffsetsPacked(text)
+      val tags = offs.indices.map(i =>
         if (i < rawTags.length) rawTags(i) else "O")
-      val ents = Decode.decodeEntities(text, toks, tags)
+      val ents = Decode.decodeEntitiesPacked(text, offs, tags.toArray)
       ents.foreach { e =>
         assert(e.tag != "O")
         assert(e.text == text.substring(e.start, e.end))
@@ -120,28 +119,51 @@ class PropertySpec extends AnyFunSuite {
   test("detector tags are deterministic and independent of prior calls") {
     val model = Detector.buildModel()
     forAll(textGen) { text =>
-      val toks = PyText.tokenizeWithOffsets(text)
-      val a = Detector.tagTokens(model, text, toks).toSeq
-      val b = Detector.tagTokens(model, text, toks).toSeq
+      val offs = PyText.tokenizeOffsetsPacked(text)
+      val a = Detector.tagTokensPacked(model, text, offs).toSeq
+      val b = Detector.tagTokensPacked(model, text, offs).toSeq
       assert(a == b)
-      assert(a.length == toks.length)
+      assert(a.length == offs.length)
     }
   }
 
+  // random text salted with gazetteer surfaces and first-person words, so
+  // the model's tags open, merge and close entities and me-sub fires
+  private val mentionTextGen: Gen[String] = Gen.listOf(Gen.frequency(
+    3 -> textGen.map(_.take(12)),
+    2 -> Gen.oneOf("Senbonzakura", "Hatsune Miku", "Melt.", "covered by",
+      "me", "I", "Myself", "remixed", "\"Ghost Rule\""))).map(_.mkString(" "))
+
   test("packed hot path == object forms: tokenizer offsets, tagger, decoder") {
     val model = Detector.buildModel()
-    forAll(textGen, n = 400) { text =>
-      val toks = PyText.tokenizeWithOffsets(text)
+    val tagGen = Gen.listOf(Gen.oneOf("O", "O", "TITLE", "VOCALOID",
+      "ORIGINAL_AUTHOR"))
+    def asTuples(es: Seq[Schemas.Entity]) = es.map(e => (e.tag, e.text, e.start, e.end))
+    val gen = for {
+      text <- Gen.oneOf(textGen, mentionTextGen); rawTags <- tagGen
+    } yield (text, rawTags)
+    forAll(gen, n = 400) { case (text, rawTags) =>
       val packed = PyText.tokenizeOffsetsPacked(text)
+      val toks = PyText.tokenizeWithOffsetsRegex(text).toIndexedSeq
       assert(packed.toSeq ==
-        toks.toSeq.map(t => (t.start.toLong << 32) | t.end.toLong),
+        toks.map(t => (t.start.toLong << 32) | t.end.toLong),
         s"offsets diverged on: $text")
-      val tags = Detector.tagTokens(model, text, toks)
-      val tagsP = Detector.tagTokensPacked(model, text, packed)
-      assert(tags.toSeq == tagsP.toSeq, s"tags diverged on: $text")
-      assert(Decode.decodeEntitiesPacked(text, packed, tagsP) ==
-        Decode.decodeEntities(text, toks.toIndexedSeq, tags.toIndexedSeq),
-        s"decode diverged on: $text")
+      // the model's tags, through the kernel and through the oracle
+      val tags = Detector.tagTokensPacked(model, text, packed)
+      assert(EngineTags(model, text, toks).toSeq == tags.toSeq,
+        s"tags diverged on: $text")
+      assert(asTuples(Decode.turnEntities(model, text, "user")) ==
+        ReferenceOracle.meSubstitute(
+          ReferenceOracle.decode(text, toks, tags.toIndexedSeq), "user"),
+        s"kernel diverged on: $text")
+      // arbitrary tag sequences through the decoder alone
+      val rnd = Array.tabulate(packed.length)(i =>
+        if (i < rawTags.length) rawTags(i) else "O")
+      assert(asTuples(Decode.meSubstitute(
+        Decode.decodeEntitiesPacked(text, packed, rnd), "user")) ==
+        ReferenceOracle.meSubstitute(
+          ReferenceOracle.decode(text, toks, rnd.toIndexedSeq), "user"),
+        s"decode diverged on: $text / ${rnd.toSeq}")
     }
   }
 

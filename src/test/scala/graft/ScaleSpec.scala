@@ -61,13 +61,13 @@ class ScaleSpec extends SparkSuite {
 
   test("fused packed extract == staged detect->decode->triples pipeline") {
     import spark.implicits._
-    import graft.operators.{Decode, Detector, Triples}
+    import graft.operators.Triples
     val turns = TranscriptGen.generate(spark, 40L)
     val fused = Pipeline.extract(spark, turns).collect()
       .map(t => (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)).sorted.toSeq
-    val bc = spark.sparkContext.broadcast(Detector.buildModel())
+    // the checkpointed build's staging: decodeTurns -> Triples.triples
     val staged = Triples.triples(spark,
-      Decode.decode(spark, Detector.detect(spark, turns, bc))).collect()
+      Pipeline.decodeTurns(spark, turns)).collect()
       .map(t => (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)).sorted.toSeq
     assert(fused.nonEmpty && fused == staged)
   }

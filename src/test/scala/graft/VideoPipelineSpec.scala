@@ -195,7 +195,7 @@ class VideoPipelineSpec extends SparkSuite {
       .flatMap { case (id, title, desc, channel) =>
         val text = s"$title [SEP] $desc"
         val toks = PyText.tokenizeWithOffsets(text).toIndexedSeq
-        val tags = Detector.tagTokens(model, text, toks.toArray).toIndexedSeq
+        val tags = EngineTags(model, text, toks).toIndexedSeq
         val ents = ReferenceOracle.meSubstitute(
           ReferenceOracle.decode(text, toks, tags), channel)
         ReferenceOracle.structuredResult(ents).toSeq.flatMap { case (tag, es) =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Pipeline, ReferenceOracle}
+import graft.{EngineTags, Pipeline, ReferenceOracle}
 import graft.functions.PyText
 import graft.operators.Detector
 import graft.synth.TranscriptGen
@@ -48,7 +48,7 @@ object KgOracleDump {
     val expected = (0L until nConvs).flatMap { c =>
       TranscriptGen.turnsOfConv(42L, c, 8).flatMap { t =>
         val toks = PyText.tokenizeWithOffsets(t.text).toIndexedSeq
-        val tags = Detector.tagTokens(model, t.text, toks.toArray).toIndexedSeq
+        val tags = EngineTags(model, t.text, toks).toIndexedSeq
         ReferenceOracle.extract(t.conv_id, t.turn_idx, t.role, t.text, toks, tags)
           .map { case (s, p, o) => (t.conv_id, t.turn_idx, s, p, o) }
       }
@@ -59,7 +59,7 @@ object KgOracleDump {
     val oracleTagCounts: Map[String, Long] = (0L until nConvs).flatMap { c =>
       TranscriptGen.turnsOfConv(42L, c, 8).flatMap { t =>
         val toks = PyText.tokenizeWithOffsets(t.text).toIndexedSeq
-        val tags = Detector.tagTokens(model, t.text, toks.toArray).toIndexedSeq
+        val tags = EngineTags(model, t.text, toks).toIndexedSeq
         ReferenceOracle.meSubstitute(
           ReferenceOracle.decode(t.text, toks, tags),
           if (t.role == null) "" else t.role).map(_._1)
@@ -132,7 +132,7 @@ object KgOracleDump {
         case (Some(ti), Some(de)) =>
           val text = ti + " [SEP] " + de
           val toks = PyText.tokenizeWithOffsets(text).toIndexedSeq
-          val stags = Detector.tagTokens(model, text, toks.toArray).toIndexedSeq
+          val stags = EngineTags(model, text, toks).toIndexedSeq
           val ents = ReferenceOracle.meSubstitute(
             ReferenceOracle.decode(text, toks, stags), "GraftChannel")
           ReferenceOracle.structuredResult(ents).toSeq.flatMap {
@@ -179,7 +179,7 @@ object KgOracleDump {
     val canonMentions: Seq[(String, String)] = (0L until nCanon).flatMap { c =>
       TranscriptGen.turnsOfConv(42L, c, 8).flatMap { t =>
         val toks = PyText.tokenizeWithOffsets(t.text).toIndexedSeq
-        val tags = Detector.tagTokens(model, t.text, toks.toArray).toIndexedSeq
+        val tags = EngineTags(model, t.text, toks).toIndexedSeq
         ReferenceOracle.meSubstitute(
           ReferenceOracle.decode(t.text, toks, tags),
           if (t.role == null) "" else t.role)
@@ -355,7 +355,7 @@ object KgOracleDump {
       (0L until nCanon).flatMap { c =>
         TranscriptGen.turnsOfConv(42L, c, 8).flatMap { t =>
           val toks = PyText.tokenizeWithOffsets(t.text).toIndexedSeq
-          val tags = Detector.tagTokens(model, t.text, toks.toArray).toIndexedSeq
+          val tags = EngineTags(model, t.text, toks).toIndexedSeq
           ReferenceOracle.extract(t.conv_id, t.turn_idx, t.role, t.text, toks, tags)
             .map { case (s2, p, o) => (t.conv_id, t.turn_idx, s2, p, o) }
         }
@@ -432,7 +432,7 @@ object KgOracleDump {
         .map(_.surface.toLowerCase(java.util.Locale.ROOT)).toSet
       turns.flatMap { t =>
         val toks = PyText.tokenizeWithOffsets(t.text).toIndexedSeq
-        val tags = Detector.tagTokens(model, t.text, toks.toArray).toIndexedSeq
+        val tags = EngineTags(model, t.text, toks).toIndexedSeq
         val gaz = ReferenceOracle.meSubstitute(
           ReferenceOracle.decode(t.text, toks, tags),
           if (t.role == null) "" else t.role)
@@ -579,7 +579,7 @@ object KgOracleDump {
         var recent = List.empty[(Int, String)]
         TranscriptGen.turnsOfConv(42L, c, 8).sortBy(_.turn_idx).flatMap { t =>
           val toks = PyText.tokenizeWithOffsets(t.text).toIndexedSeq
-          val tags = Detector.tagTokens(model, t.text, toks.toArray).toIndexedSeq
+          val tags = EngineTags(model, t.text, toks).toIndexedSeq
           val ents = ReferenceOracle.meSubstitute(
             ReferenceOracle.decode(t.text, toks, tags),
             if (t.role == null) "" else t.role)
